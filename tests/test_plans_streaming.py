@@ -221,9 +221,11 @@ def test_minhash_shuffles_are_signature_sized(spark):
     # formatted plan prints each exchange's Input [...] on the next line)
     lines = formatted_plan(df).splitlines()
     for i, ln in enumerate(lines):
-        if ln.startswith("(") and ") Exchange" in ln and "hashpartitioning" in lines[i + 2]:
-            inp = lines[i + 1]
-            assert "shingle" not in inp and "text#" not in inp, f"{ln}\n{inp}"
+        if ln.startswith("(") and ") Exchange" in ln:
+            assert i + 2 < len(lines), f"exchange without Input/Arguments lines:\n{ln}"
+            if "hashpartitioning" in lines[i + 2]:
+                inp = lines[i + 1]
+                assert "shingle" not in inp and "text#" not in inp, f"{ln}\n{inp}"
 
 
 def test_spread_input_guard(spark):
